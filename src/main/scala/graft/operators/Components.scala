@@ -11,9 +11,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * Two execution paths behind one contract:
   *
-  *  - **Small pair sets** (≤ `localMax` rows): stream the pair list to
-  *    the driver (toLocalIterator — one partition in memory at a time)
-  *    and run union-find, then parallelize the labeling back out.
+  *  - **Small pair sets** (≤ `localMax` rows): collect the pair list
+  *    to the driver in one job (`limit(localMax + 1).collect()`) and
+  *    run union-find, then parallelize the labeling back out.
   *    Near-dup pair sets are orders of magnitude smaller than the
   *    corpus (a few pairs per duplicate family), so even a 100 TB
   *    corpus commonly yields a few million pairs — paying 5-6 Spark
@@ -53,8 +53,8 @@ object Components {
   /** Driver-side union-find over the collected pair list; None when the
     * list exceeds `localMax` rows (caller falls back to distributed
     * propagation). The size probe is `limit(localMax + 1).collect()` —
-    * ONE job (toLocalIterator would pay a scheduling round-trip per
-    * partition, 32 sequential mini-jobs on a 32-partition pair plan),
+    * ONE job however many partitions the pair plan has (a streaming
+    * iterator would pay a scheduling round trip per partition or wave),
     * and the transfer is bounded by localMax rows (~16 B each) whatever
     * the true pair count is. Roots are always the component-minimum id:
     * unions attach the larger root under the smaller, so find(root) is

@@ -61,21 +61,24 @@ final class DocStore(val spark: SparkSession, val dir: String,
     * optimistic transactions run at commit (first-committer-wins):
     * stamp at first touch, re-stamp under the write lock, mismatch =
     * write conflict. Never reads data bytes — O(files) metadata only,
-    * which is what lets a 100 TB collection validate in milliseconds. */
+    * which is what lets a 100 TB collection validate in milliseconds.
+    * The inference sidecar is left out: it is reader-private metadata
+    * that a READ may flush, and a reader must not conflict with itself. */
   def contentStamp(name: String): String = {
     val f = fs
     val root = new Path(path(name))
     if (!f.exists(root)) return "absent"
     val md = java.security.MessageDigest.getInstance("MD5")
     def walk(p: Path): Unit =
-      f.listStatus(p).sortBy(_.getPath.getName).foreach { st =>
-        md.update(st.getPath.getName.getBytes("UTF-8"))
-        if (st.isDirectory) walk(st.getPath)
-        else {
-          md.update(java.nio.ByteBuffer.allocate(16)
-            .putLong(st.getLen).putLong(st.getModificationTime).array())
+      f.listStatus(p).filter(_.getPath.getName != DocStore.InferSidecarName)
+        .sortBy(_.getPath.getName).foreach { st =>
+          md.update(st.getPath.getName.getBytes("UTF-8"))
+          if (st.isDirectory) walk(st.getPath)
+          else {
+            md.update(java.nio.ByteBuffer.allocate(16)
+              .putLong(st.getLen).putLong(st.getModificationTime).array())
+          }
         }
-      }
     walk(root)
     md.digest().map("%02x".format(_)).mkString
   }
@@ -466,7 +469,7 @@ final class DocStore(val spark: SparkSession, val dir: String,
     val schema = df.schema
     val keep = new java.util.ArrayDeque[Array[Byte]]()
     var bytes = 0L
-    val it = df.toLocalIterator()
+    val it = graft.operators.StreamCollect.rows(df)
     while (it.hasNext) {
       val doc = graft.bson.BsonBinary.encodeRow(it.next(), schema)
       keep.addLast(doc); bytes += doc.length

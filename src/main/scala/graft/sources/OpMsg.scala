@@ -716,7 +716,14 @@ object OpMsg {
     * cursor (FilterCompiler evaluates the filter, rows encode through
     * the BSON sink writer), `getMore` pages it, `cursor.id = 0` closes
     * it. One message loop per connection (cursors are connection-
-    * agnostic here; a real driver pins them — both work). */
+    * agnostic here; a real driver pins them — both work).
+    *
+    * A find or aggregate cursor streams its plan through
+    * [[graft.operators.StreamCollect]]: one Spark job per wave of
+    * `defaultParallelism` partitions, the next wave only once the
+    * client has paged through the current one. Each open cursor
+    * therefore holds at most one wave of partitions' rows on the
+    * driver; a `getMore` inside a fetched wave runs no job. */
   final class Server(spark: SparkSession, store: graft.sinks.DocStore,
                      db: String = "graft",
                      auth: Option[(String, String)] = None,
@@ -1317,9 +1324,11 @@ object OpMsg {
       }
     }
 
-    /** Open-cursor count — observability for specs (a real mongod
-      * reports this through serverStatus.metrics.cursor). */
+    /** Open-cursor count — observability for specs; serverStatus
+      * reports it as metrics.cursor.open.total. */
     def openCursors: Int = cursors.size
+    // cursors the idle reaper closed: serverStatus metrics.cursor.timedOut
+    private val cursorsTimedOut = new java.util.concurrent.atomic.AtomicLong(0L)
 
     // rendered command documents in arrival order — spec observability
     // for containment contracts (did the residual/limit cross the
@@ -1348,7 +1357,9 @@ object OpMsg {
     private def sweepCursors(): Unit = {
       val deadline = System.nanoTime() - cursorTimeoutMillis * 1000000L
       val it = cursors.entrySet().iterator()
-      while (it.hasNext) if (it.next().getValue.lastUsed < deadline) it.remove()
+      while (it.hasNext) if (it.next().getValue.lastUsed < deadline) {
+        it.remove(); cursorsTimedOut.incrementAndGet(): Unit
+      }
       // mongod's transactionLifetimeLimitSeconds (default 60): an
       // active transaction left open past the limit aborts server-side
       // — its staged overlays drop, and the session's next touch or
@@ -2579,6 +2590,10 @@ object OpMsg {
               "update" -> opc("update"), "delete" -> opc("delete"),
               "getmore" -> opc("getmore"),
               "command" -> opc("command"))),
+            "metrics" -> JObject(List("cursor" -> JObject(List(
+              "timedOut" -> JLong(cursorsTimedOut.get()),
+              "open" -> JObject(List(
+                "total" -> JLong(cursors.size.toLong))))))),
             "ok" -> JDouble(1.0))))
         case _ => ()
       }
@@ -3237,12 +3252,8 @@ object OpMsg {
       def openCursor(df: org.apache.spark.sql.DataFrame, coll: String,
                      batchSize: Int): Array[Byte] = {
         val ns = s"$db.$coll"
-        val jit = df.toLocalIterator()
-        val sit = new Iterator[org.apache.spark.sql.Row] {
-          def hasNext: Boolean = jit.hasNext
-          def next(): org.apache.spark.sql.Row = jit.next()
-        }
-        val c = new Cursor(ns, sit, df.schema, batchSize)
+        val c = new Cursor(ns, graft.operators.StreamCollect.rows(df),
+          df.schema, batchSize)
         val first = pull(c)
         val id = if (c.rows.hasNext) {
           val i = nextCursor.incrementAndGet(); cursors.put(i, c); i
@@ -3970,12 +3981,9 @@ object OpMsg {
         else 0L)
       }.fold(0L)(_ + _)
     } else {
-      // driver-side single connection: bounded memory via toLocalIterator
-      val jit = df.toLocalIterator()
-      val rows = new Iterator[org.apache.spark.sql.Row] {
-        def hasNext: Boolean = jit.hasNext
-        def next(): org.apache.spark.sql.Row = jit.next()
-      }
+      // driver-side single connection: memory bounded by one wave of
+      // partitions (StreamCollect)
+      val rows = graft.operators.StreamCollect.rows(df)
       insertIterator(host, port, db, coll, rows, schema, credentials, tls,
         compress, checksum, compressor, maxBatchDocs, maxBatchBytes)
     }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkFixture
@@ -56,6 +57,37 @@ class HashedShinglesSpec extends AnyFunSuite {
           assert(got(id) == expected(id), s"id $id: n=$n diverged for '$text'")
         }
       }
+    }
+  }
+
+  test("shingle width: a LONG literal folds like an INT; a non-foldable, " +
+       "non-integer or non-positive width fails with a clear message") {
+    graft.functions.GraftFunctions.register(spark)
+    val df = Seq((1, "a b c a b c d")).toDF("w", "text")
+    for (fn <- Seq("hashed_shingles", "word_shingles")) {
+      val in = if (fn == "hashed_shingles") col("text")
+        else split(col("text"), " ")
+      def run(width: Column) = df.select(call_function(fn, in, width)).collect()
+      assert(run(lit(3L)).toSeq == run(lit(3)).toSeq)
+      def refusal(width: Column): String = {
+        val e = intercept[Exception](run(width))
+        val chain = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).toSeq
+        assert(!chain.exists(t => t.isInstanceOf[ClassCastException] ||
+          t.isInstanceOf[NullPointerException]), s"opaque failure: $e")
+        chain.map(t => String.valueOf(t.getMessage)).mkString(" | ")
+      }
+      val nonFoldable = refusal(col("w"))
+      assert(nonFoldable.contains(s"$fn: width argument must be a " +
+        "foldable integer literal"), nonFoldable)
+      val tooWide = refusal(lit(1L << 40))
+      assert(tooWide.contains(s"$fn: width argument must be an INT " +
+        "literal"), tooWide)
+      val text = refusal(lit("3"))
+      assert(text.contains(s"$fn: width argument must be an INT literal"),
+        text)
+      val zero = refusal(lit(0))
+      assert(zero.contains(s"$fn: width must be at least 1"), zero)
     }
   }
 }

@@ -387,4 +387,217 @@ class OpMsgSpec extends AnyFunSuite {
       store.drop("big"): Unit
     }
   }
+
+  // ---- wave-streamed cursors: asserted on job counts, not timing ----
+
+  private val ServerTag = "graft.test.opmsg.server"
+  private val MarkKey = "graft.test.opmsg.mark"
+
+  /** Counts the Spark jobs started by threads that carry `ServerTag` =
+    * `tag` (the server's threads inherit it from the thread that built
+    * the server). Listener delivery is asynchronous, so every reading
+    * first runs a one-task mark job and waits for its start event: the
+    * events of every job started before it are delivered by then. */
+  private final class JobCounter(tag: String)
+      extends org.apache.spark.scheduler.SparkListener {
+    private val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    private val marks =
+      java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    override def onJobStart(
+        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      Option(e.properties).foreach { p =>
+        Option(p.getProperty(MarkKey)).foreach(marks.add)
+        if (p.getProperty(ServerTag) == tag) jobs.incrementAndGet(): Unit
+      }
+    private def settled(): Int = {
+      val sc = spark.sparkContext
+      val mark = java.util.UUID.randomUUID().toString
+      sc.setLocalProperty(MarkKey, mark)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(MarkKey, null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!marks.contains(mark)) {
+        assert(System.nanoTime() < deadline, "listener bus stalled")
+        Thread.sleep(5)
+      }
+      jobs.get
+    }
+    /** `body`'s result and the number of tagged jobs it started. */
+    def during[T](body: => T): (T, Int) = {
+      val before = settled()
+      val r = body
+      (r, settled() - before)
+    }
+  }
+
+  /** Runs `body` on this thread under the server tag, so its jobs
+    * count too (the plain-Spark side of a comparison). */
+  private def tagged[T](tag: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    sc.setLocalProperty(ServerTag, tag)
+    try body finally sc.setLocalProperty(ServerTag, null)
+  }
+
+  /** A store whose `waves` collection is `files` graftdocs files of 60
+    * documents (`_id` 0 until 60 × files; `k` a permutation of them),
+    * a server built under a fresh tag, and that tag's job counter. */
+  private def waveFixture(files: Int, cursorTimeoutMillis: Long = 600000L)
+      : (graft.sinks.DocStore, OpMsg.Server, JobCounter, String) = {
+    val store = new graft.sinks.DocStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_opmsg_waves").toString,
+      "graftdocs")
+    val n = 60L * files
+    store.write(spark.range(0, n, 1, files).select(
+      col("id").cast("int").as("_id"),
+      (col("id") * 7919 % n).as("k")), "waves")
+    val written = new java.io.File(store.path("waves")).listFiles()
+      .count(_.getName.endsWith(".jsonl"))
+    assert(written == files, s"fixture wrote $written files, not $files")
+    assert(store.read("waves").rdd.getNumPartitions == files)
+    val tag = java.util.UUID.randomUUID().toString
+    val server = tagged(tag)(new OpMsg.Server(spark, store,
+      cursorTimeoutMillis = cursorTimeoutMillis))
+    val counter = new JobCounter(tag)
+    spark.sparkContext.addSparkListener(counter)
+    (store, server, counter, tag)
+  }
+
+  private def wire(srv: OpMsg.Server, doc: (String, JValue)*)
+      : Map[String, JValue] =
+    OpMsg.command("127.0.0.1", srv.port, "graft", JObject(doc.toList))
+
+  /** (cursor id, documents as (_id, k)) of a cursor reply. */
+  private def page(reply: Map[String, JValue]): (Long, List[(Int, Long)]) = {
+    val c = reply("cursor").asInstanceOf[JObject].obj.toMap
+    val id = c("id") match {
+      case JLong(i) => i
+      case JInt(i) => i.toLong
+      case other => fail(s"bad cursor id $other")
+    }
+    val docs = (c.get("firstBatch") orElse c.get("nextBatch")) match {
+      case Some(JArray(ds)) => ds.map { d =>
+        val m = d.asInstanceOf[JObject].obj.toMap
+        (m("_id").asInstanceOf[JInt].num.toInt,
+          m("k").asInstanceOf[JLong].num)
+      }
+      case other => fail(s"bad batch $other")
+    }
+    (id, docs)
+  }
+
+  private def getMore(srv: OpMsg.Server, id: Long, batch: Int) =
+    page(wire(srv, "getMore" -> JLong(id), "collection" -> JString("waves"),
+      "batchSize" -> JInt(batch)))
+
+  /** serverStatus metrics.cursor as (open.total, timedOut). */
+  private def cursorMetrics(srv: OpMsg.Server): (Long, Long) = {
+    val status = JObject(wire(srv, "serverStatus" -> JInt(1)).toList)
+    (status \ "metrics" \ "cursor" \ "open" \ "total",
+      status \ "metrics" \ "cursor" \ "timedOut") match {
+      case (JLong(open), JLong(timedOut)) => (open, timedOut)
+      case other => fail(s"bad metrics.cursor $other")
+    }
+  }
+
+  test("a find over P > slots files streams in waves: ceil(P / slots) " +
+       "jobs, rows in partition order, no job for a getMore inside a " +
+       "fetched wave; serverStatus counts the open cursor until it drains") {
+    val files = 10
+    val (store, srv, jobs, _) = waveFixture(files)
+    try {
+      val slots = spark.sparkContext.defaultParallelism
+      assert(files > slots, s"needs more files than the $slots slots")
+      // plain Spark, partition order (no sort)
+      val plain = store.read("waves").collect().toList
+        .map(r => (r.getAs[Int]("_id"), r.getAs[Long]("k")))
+      val ((id0, first), findJobs) = jobs.during(page(wire(srv,
+        "find" -> JString("waves"), "batchSize" -> JInt(20))))
+      assert(findJobs == 1, "the first batch costs one job: the first wave")
+      assert(id0 != 0L && first.size == 20)
+      assert(cursorMetrics(srv) == ((1L, 0L)))
+      // slots × 60 rows are on the driver: the next 20 need no job
+      val ((id1, second), inWave) = jobs.during(getMore(srv, id0, 20))
+      assert(inWave == 0, "a getMore inside a fetched wave ran a job")
+      assert(id1 == id0 && second.size == 20)
+      var id = id1
+      var rows = first ++ second
+      var total = findJobs
+      while (id != 0L) {
+        val ((next, docs), j) = jobs.during(getMore(srv, id, 20))
+        id = next; rows ++= docs; total += j
+      }
+      assert(total == (files + slots - 1) / slots)
+      assert(rows == plain)
+      assert(cursorMetrics(srv) == ((0L, 0L)))
+    } finally {
+      srv.stop(); spark.sparkContext.removeSparkListener(jobs)
+    }
+  }
+
+  test("a sorted find over P > slots range partitions pages across " +
+       "waves in plain Spark's order: plain Spark's sort jobs, then " +
+       "ceil(P / slots) wave jobs in place of its one collect job") {
+    val parts = 10
+    val (store, srv, jobs, tag) = waveFixture(4)
+    val conf = spark.conf
+    val saved = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+      .map(k => k -> conf.getOption(k))
+    try {
+      // the sort's exchange keeps `parts` partitions (no AQE coalescing)
+      conf.set("spark.sql.shuffle.partitions", parts.toString)
+      conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      val slots = spark.sparkContext.defaultParallelism
+      val sorted = store.read("waves").orderBy(desc("k"))
+      val (plain, plainJobs) = jobs.during(tagged(tag)(
+        sorted.collect().toList
+          .map(r => (r.getAs[Int]("_id"), r.getAs[Long]("k")))))
+      assert(tagged(tag)(sorted.queryExecution.executedPlan.execute()
+        .getNumPartitions) == parts)
+      val (rows, wireJobs) = jobs.during {
+        var (id, rows) = page(wire(srv, "find" -> JString("waves"),
+          "sort" -> JObject(List("k" -> JInt(-1))), "batchSize" -> JInt(25)))
+        while (id != 0L) {
+          val (next, docs) = getMore(srv, id, 25)
+          id = next; rows ++= docs
+        }
+        rows
+      }
+      assert(rows == plain)
+      assert(rows.map(_._2) == (0L until 240L).reverse.toList)
+      assert(wireJobs == plainJobs - 1 + (parts + slots - 1) / slots)
+    } finally {
+      saved.foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None) => conf.unset(k)
+      }
+      srv.stop(); spark.sparkContext.removeSparkListener(jobs)
+    }
+  }
+
+  test("killCursors after the first batch starts no further job; " +
+       "serverStatus open.total drops to 0, timedOut counts the reaper") {
+    val (_, srv, jobs, _) = waveFixture(10, cursorTimeoutMillis = 2000L)
+    try {
+      val ((id, _), findJobs) = jobs.during(page(wire(srv,
+        "find" -> JString("waves"), "batchSize" -> JInt(20))))
+      assert(findJobs == 1 && id != 0L)
+      assert(cursorMetrics(srv) == ((1L, 0L)))
+      val (killed, killJobs) = jobs.during(wire(srv,
+        "killCursors" -> JString("waves"),
+        "cursors" -> JArray(List(JLong(id)))))
+      assert(killed("cursorsKilled") == JArray(List(JLong(id))))
+      assert(killJobs == 0, "killCursors started a job")
+      assert(cursorMetrics(srv) == ((0L, 0L)))
+      // an idle cursor past cursorTimeoutMillis: the reaper closes it
+      // on the next request, and serverStatus counts it
+      val (idle, _) = page(wire(srv, "find" -> JString("waves"),
+        "batchSize" -> JInt(20)))
+      assert(idle != 0L && cursorMetrics(srv) == ((1L, 0L)))
+      Thread.sleep(2500)
+      assert(cursorMetrics(srv) == ((0L, 1L)))
+    } finally {
+      srv.stop(); spark.sparkContext.removeSparkListener(jobs)
+    }
+  }
 }

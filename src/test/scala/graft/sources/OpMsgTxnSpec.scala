@@ -219,6 +219,33 @@ class OpMsgTxnSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("a transaction that reads an append-created collection commits: " +
+       "the read path's inference-sidecar flush is not a write conflict") {
+    val (store, srv) = fixture()
+    try {
+      // a wire insert creates `fresh` by append: its inference sidecar
+      // is pending until the first read flushes it
+      cmd(srv, "insert" -> JString("fresh"),
+        "documents" -> JArray(List(JObject(List(
+          "_id" -> JInt(1), "kind" -> JString("w"), "n" -> JLong(5L))))))
+      val sidecar = new java.io.File(store.path("fresh"),
+        graft.sinks.DocStore.InferSidecarName)
+      assert(!sidecar.exists())
+      val sid = "txn-sess-sidecar"
+      // first touch stamps `fresh`, then reads it: the flush lands here
+      val read = txnCmd(srv, sid, 1L, start = true,
+        "find" -> JString("fresh"))
+      assert(batch(read).map(_("_id")) == List(JInt(1)))
+      assert(sidecar.exists())
+      txnCmd(srv, sid, 1L, start = false,
+        "insert" -> JString("aux"),
+        "documents" -> JArray(List(JObject(List(
+          "_id" -> JInt(12), "kind" -> JString("c"), "n" -> JLong(3L))))))
+      assert(commit(srv, sid, 1L)("ok") == JDouble(1.0))
+      assert(ns(srv, "aux") == List((9, 1), (12, 3)))
+    } finally srv.stop()
+  }
+
   test("read/write concern validation: levels accepted incl. snapshot " +
        "on the first txn op, unknown level refuses, readConcern on a " +
        "NON-first txn op and writeConcern on a non-commit txn op " +
