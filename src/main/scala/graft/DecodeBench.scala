@@ -9,13 +9,15 @@ import org.apache.spark.sql.{SparkSession, functions => F}
   * and a nested document shape. Prints one JSON line of median seconds
   * per (shape, format, path).
   *
-  * Measured (sf0.1×10 = 1.5M docs, 8 files, local[32], median of 5 after
-  * a warmup sweep): nested bson direct 0.25s vs tree 0.69s (2.7×);
-  * nested jsonl direct 1.01s vs tree 1.27s (1.26×, 1.34× vs row); flat
-  * bson direct 0.28s vs tree 0.36s (1.3×); flat jsonl neutral (~1.0s
-  * all paths — Jackson lexing dominates and a 6-field tree is cheap;
-  * the token path's win is the per-doc tree it stops allocating, so it
-  * grows with document width/nesting).
+  * Measured (sf0.1×10 = 1.5M docs, 8 files, SPARK_GRAFT_CPUS=4 i.e.
+  * local[4] on a shared 4-core host, median of 5 after a warmup sweep):
+  * flat bson direct 0.18s vs tree 0.36s vs row 0.36s (2.0×); flat jsonl
+  * direct 0.46s vs tree 0.55s vs row 0.59s (1.2×); nested bson direct
+  * 0.22s vs tree 0.67s vs row 0.84s (3.1×); nested jsonl direct 0.47s vs
+  * tree 0.85s vs row 0.87s (1.8×). JSONL lines are framed by bulk array
+  * scans, so Jackson no longer dominates flat jsonl: the token path's
+  * win over the tree is the per-doc tree it stops allocating, and grows
+  * with document width and nesting.
   *
   * Usage: runMain graft.DecodeBench <sfDir> [reps]
   */

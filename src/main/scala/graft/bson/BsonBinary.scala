@@ -28,7 +28,7 @@ object BsonBinary {
   private val F = JsonNodeFactory.instance
 
   /** BSON decimal128 exponent bias (IEEE 754-2008 BID). */
-  private val DecimalBias = 6176
+  private[bson] final val DecimalBias = 6176
 
   /** Per-document size cap, enforced symmetrically: the parser rejects
     * larger length prefixes (corruption guard), so the encoder must

@@ -91,13 +91,85 @@ private[graft] object BsonVectorDecoder {
     case other => f"0x$other%02x"
   }
 
-  /** Read a cstring (element name); returns it as a String. */
-  private def cstring(buf: ByteBuffer): String = {
-    val start = buf.position()
-    while (buf.get() != 0) {}
-    val len = buf.position() - start - 1
-    new String(buf.array(), buf.arrayOffset() + start, len,
-      java.nio.charset.StandardCharsets.UTF_8)
+  /** Offset (in `buf`'s backing array) of the NUL ending the cstring at
+    * `buf`'s position; underflows like `get()` when the document ends
+    * first. */
+  private def cstringEnd(buf: ByteBuffer): Int = {
+    val a = buf.array()
+    val lim = buf.arrayOffset() + buf.limit()
+    var p = buf.arrayOffset() + buf.position()
+    while (p < lim && a(p) != 0) p += 1
+    if (p == lim) throw new java.nio.BufferUnderflowException
+    p
+  }
+
+  /** Advance past a cstring (array index keys, wrapper probes) without
+    * decoding it. */
+  private def skipCString(buf: ByteBuffer): Unit =
+    buf.position(cstringEnd(buf) - buf.arrayOffset() + 1)
+
+  /** One struct level's declared field names as UTF-8 bytes: element
+    * names match in place, with no String built per element. Documents
+    * repeat one field order, so the field after the last match is tried
+    * first; otherwise an open-addressing table keyed on the name bytes
+    * answers. A name declared twice resolves to its LAST declaration.
+    * NOT thread-safe (the last-match cursor is per-partition state). */
+  final class NameTable(fieldNames: Array[String]) {
+    private val n = fieldNames.length
+    private val names = fieldNames.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    private val owner: Array[Int] = fieldNames.map(fieldNames.lastIndexOf(_))
+    private val mask = Integer.highestOneBit(math.max(2, n) * 2) * 2 - 1
+    private val slots: Array[Int] = {
+      val t = Array.fill(mask + 1)(-1)
+      var j = 0
+      while (j < n) {
+        if (owner(j) == j) {
+          var s = hash(names(j), 0, names(j).length) & mask
+          while (t(s) >= 0) s = (s + 1) & mask
+          t(s) = j
+        }
+        j += 1
+      }
+      t
+    }
+    private var expect = 0
+
+    private def hash(a: Array[Byte], off: Int, len: Int): Int = {
+      var h = len
+      var i = 0
+      while (i < len) { h = 31 * h + a(off + i); i += 1 }
+      h ^ (h >>> 16)
+    }
+
+    private def sameBytes(j: Int, a: Array[Byte], off: Int, len: Int): Boolean = {
+      val b = names(j)
+      b.length == len && {
+        var i = 0
+        while (i < len && b(i) == a(off + i)) i += 1
+        i == len
+      }
+    }
+
+    /** Consume the element name at `buf`'s position; the declared index
+      * it names, or -1 for an undeclared name. */
+    def matchName(buf: ByteBuffer): Int = {
+      val a = buf.array()
+      val off = buf.arrayOffset() + buf.position()
+      val end = cstringEnd(buf)
+      val len = end - off
+      buf.position(end - buf.arrayOffset() + 1)
+      if (n == 0) return -1
+      val e = expect
+      val j =
+        if (owner(e) == e && sameBytes(e, a, off, len)) e
+        else {
+          var s = hash(a, off, len) & mask
+          while (slots(s) >= 0 && !sameBytes(slots(s), a, off, len)) s = (s + 1) & mask
+          slots(s)
+        }
+      if (j >= 0) expect = if (j + 1 == n) 0 else j + 1
+      j
+    }
   }
 
   /** Advance past one value of element type `t` without materializing. */
@@ -149,6 +221,16 @@ private[graft] object BsonVectorDecoder {
       throw new GraftTypeError(
         s"field '${field.name}': ${field.dataType.simpleString} overflow: $what")
   }
+
+  /** Decimal128 bits → BigDecimal. A coefficient that fits in a long
+    * builds the value from the bits; NaN, Infinity, the `11`
+    * combination form and wider coefficients take the canonical string
+    * (whose parse rejects NaN/Infinity — the malformed rule). */
+  private def decimal128(high: Long, low: Long): java.math.BigDecimal =
+    if ((high >>> 61 & 0x3L) != 0x3L && (high & 0x1FFFFFFFFFFFFL) == 0L && low >= 0L) {
+      val exp = ((high >>> 49) & 0x3FFFL).toInt - BsonBinary.DecimalBias
+      java.math.BigDecimal.valueOf(if (high < 0L) -low else low, -exp)
+    } else new java.math.BigDecimal(BsonBinary.decimal128ToString(high, low))
 
   def writerFor(field: StructField, strict: Boolean): FieldWriter = {
     val meta = field.metadata
@@ -269,8 +351,7 @@ private[graft] object BsonVectorDecoder {
         def write(t: Byte, buf: ByteBuffer, v: WritableColumnVector): Unit = t match {
           case TDec128 =>
             val low = buf.getLong(); val high = buf.getLong()
-            val s = BsonBinary.decimal128ToString(high, low)
-            try appendBig(new java.math.BigDecimal(s), v)
+            try appendBig(decimal128(high, low), v)
             catch { case scala.util.control.NonFatal(e) => malformed(e, v) }
           case TInt32 => appendBig(java.math.BigDecimal.valueOf(buf.getInt().toLong), v)
           case TInt64 => appendBig(java.math.BigDecimal.valueOf(buf.getLong()), v)
@@ -320,11 +401,7 @@ private[graft] object BsonVectorDecoder {
 
       case st: StructType =>
         val subWriters = st.fields.map(writerFor(_, strict))
-        val subIdx: java.util.HashMap[String, Integer] = {
-          val m = new java.util.HashMap[String, Integer]()
-          st.fields.zipWithIndex.foreach { case (f, i) => m.put(f.name, i) }
-          m
-        }
+        val subNames = new NameTable(st.fieldNames)
         new FieldWriter(field) {
           val strict0 = strict
           private val seen = new Array[Boolean](subWriters.length)
@@ -337,9 +414,8 @@ private[graft] object BsonVectorDecoder {
               // the tree path fails it as a type mismatch; mirror that
               val start = buf.position()
               val et = buf.get()
-              val isWrapper = et != 0 && {
-                val nm = cstring(buf)
-                nm.startsWith("$") && { skipValue(et, buf); buf.get() == 0 }
+              val isWrapper = et != 0 && buf.get() == '$' && {
+                skipCString(buf); skipValue(et, buf); buf.get() == 0
               }
               buf.position(start)
               if (isWrapper) {
@@ -353,9 +429,8 @@ private[graft] object BsonVectorDecoder {
                 java.util.Arrays.fill(seen, false)
                 var ct = buf.get()
                 while (ct != 0) {
-                  val nm = cstring(buf)
-                  val j = subIdx.get(nm)
-                  if (j != null && !seen(j)) {
+                  val j = subNames.matchName(buf)
+                  if (j >= 0 && !seen(j)) {
                     subWriters(j).writeOrNull(ct, buf, v.getChild(j))
                     seen(j) = true
                   } else skipValue(ct, buf)
@@ -385,7 +460,7 @@ private[graft] object BsonVectorDecoder {
               var n = 0
               var ct = buf.get()
               while (ct != 0) {
-                cstring(buf) // positional index key
+                skipCString(buf) // positional index key
                 elemWriter.writeOrNull(ct, buf, child)
                 n += 1
                 ct = buf.get()
@@ -411,15 +486,14 @@ private[graft] object BsonVectorDecoder {
   /** Walk one top-level document body (after its int32 length; includes
     * the 0x00 terminator), appending one value per schema field. */
   def walkDocument(buf: ByteBuffer, writers: Array[FieldWriter],
-                   fieldIdx: java.util.HashMap[String, Integer],
+                   names: NameTable,
                    vectors: Array[_ <: WritableColumnVector],
                    seen: Array[Boolean]): Unit = {
     java.util.Arrays.fill(seen, false)
     var t = buf.get()
     while (t != 0) {
-      val name = cstring(buf)
-      val j = fieldIdx.get(name)
-      if (j != null && !seen(j)) {
+      val j = names.matchName(buf)
+      if (j >= 0 && !seen(j)) {
         writers(j).writeOrNull(t, buf, vectors(j))
         seen(j) = true
       } else skipValue(t, buf)

@@ -439,7 +439,7 @@ final class DocStore(val spark: SparkSession, val dir: String,
     Some((node.get("max").asLong(), node.get("size").asLong()))
   }
 
-  def dropCapped(name: String): Boolean = fs.delete(cappedPath(name), false)
+  def dropCapped(name: String): Boolean = DocStore.deleteFile(fs, cappedPath(name))
 
   /** mongod's convertToCapped: rebuild an ordinary collection as a
     * capped one under the same name, keeping the NEWEST budget-ful of
@@ -573,8 +573,12 @@ final class DocStore(val spark: SparkSession, val dir: String,
 
   /** Update the in-memory inference state: add `put` entries, remove
     * `drop` entries. Serialized per collection by the caller
-    * (capMonitor); no file I/O — see [[flushInferSidecar]]. */
-  private def updateInferSidecar(name: String, put: Map[String, String],
+    * (capMonitor); no file I/O — see [[flushInferSidecar]]. `put` is
+    * evaluated inside the guard: a batch whose type tree cannot be
+    * folded (it committed, but does not fully parse) drops the state,
+    * so readers fall back to the inference job instead of the append
+    * failing after its commit. */
+  private def updateInferSidecar(name: String, put: => Map[String, String],
                                  drop: Seq[String] = Seq.empty): Unit =
     try {
       val prev = inferState.get(name) match {
@@ -607,7 +611,7 @@ final class DocStore(val spark: SparkSession, val dir: String,
         case scala.util.control.NonFatal(_) =>
           // a broken sidecar must never break reads — drop it
           inferState.remove(name): Unit
-          try fs.delete(inferSidecarPath(name), false): Unit
+          try DocStore.deleteFile(fs, inferSidecarPath(name)): Unit
           catch { case scala.util.control.NonFatal(_) => () }
       }
     }
@@ -641,7 +645,7 @@ final class DocStore(val spark: SparkSession, val dir: String,
       val dropForDocs = max > 0 && totalDocs - headCount >= max
       val dropForBytes = size > 0 && totalBytes > size
       if (dropForDocs || dropForBytes) {
-        f.delete(new Path(target, head), false): Unit
+        DocStore.deleteFile(f, new Path(target, head)): Unit
         updateInferSidecar(name, Map.empty, drop = Seq(head))
         files = files.tail
       } else dropping = false
@@ -678,7 +682,7 @@ final class DocStore(val spark: SparkSession, val dir: String,
       // and momentary for scans, the lesser hazard
       if (!f.rename(tmp, new Path(target, s"insert_${nanos}_$keep.bson")))
         throw new MqlException(s"cap rewrite commit failed for '$name'")
-      f.delete(new Path(target, head), false): Unit
+      DocStore.deleteFile(f, new Path(target, head)): Unit
       // the rewritten head's tree re-folds from the surviving slice (in
       // hand) so the sidecar stays exact through eviction
       updateInferSidecar(name,
@@ -721,7 +725,7 @@ final class DocStore(val spark: SparkSession, val dir: String,
   def isView(name: String): Boolean =
     try fs.exists(viewPath(name)) catch { case _: MqlException => false }
 
-  def dropView(name: String): Boolean = fs.delete(viewPath(name), false)
+  def dropView(name: String): Boolean = DocStore.deleteFile(fs, viewPath(name))
 
   /** (viewOn, pipeline json) of a view, if `name` is one. */
   def viewDef(name: String): Option[(String, String)] = {
@@ -1061,7 +1065,7 @@ final class DocStore(val spark: SparkSession, val dir: String,
     // a live dataset must not have one — a later crash mid-retire would
     // otherwise leave the STALE timestamp looking authoritative where
     // the missing-marker case is designed to fail loudly
-    fs.delete(new Path(path(name), "_graft_retired_at"), false): Unit
+    DocStore.deleteFile(fs, new Path(path(name), "_graft_retired_at")): Unit
     retired
   }
 
@@ -1445,5 +1449,17 @@ object DocStore {
         case other => other
       }
     else f
+  }
+
+  /** Delete through the store's FileSystem. On the raw local fs a file
+    * written while checksums were on keeps its ChecksumFileSystem twin
+    * `.<name>.crc`, which the raw delete would orphan: remove it too,
+    * best effort. */
+  private[sinks] def deleteFile(f: org.apache.hadoop.fs.FileSystem, p: Path): Boolean = {
+    val deleted = f.delete(p, false)
+    if (f.isInstanceOf[org.apache.hadoop.fs.RawLocalFileSystem])
+      try f.delete(new Path(p.getParent, s".${p.getName}.crc"), false): Unit
+      catch { case scala.util.control.NonFatal(_) => () }
+    deleted
   }
 }

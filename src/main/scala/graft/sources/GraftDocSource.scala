@@ -704,12 +704,8 @@ private[sources] class GraftAggReaderFactory(aggs: Seq[PushedAgg],
     if (p.path.endsWith(".bson")) return p.end - p.start >= 5
     val path = new Path(p.path)
     val fsIn = path.getFileSystem(conf.value).open(path)
-    try {
-      val in = new java.io.BufferedInputStream(fsIn, 1 << 10)
-      var b = in.read()
-      while (b == '\n') b = in.read()
-      b != -1
-    } finally fsIn.close()
+    try new JsonlRawLines(fsIn, 0L, Long.MaxValue).skipEmptyLines()
+    finally fsIn.close()
   }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -879,28 +875,9 @@ private[sources] class GraftAggReaderFactory(aggs: Seq[PushedAgg],
     * the exact row set JsonlLineIterator would decode. */
   private def countJsonlLines(fsIn: org.apache.hadoop.fs.FSDataInputStream,
                               start: Long, end: Long): Long = {
-    var pos = if (start > 0) start - 1 else 0L
-    if (pos > 0) fsIn.seek(pos)
-    val in = new java.io.BufferedInputStream(fsIn, 1 << 16)
-    if (start > 0) { // discard through the split-leading newline
-      var b = in.read()
-      while (b != -1 && b != '\n') { pos += 1; b = in.read() }
-      if (b != -1) pos += 1
-    }
+    val lines = new JsonlRawLines(fsIn, start, end)
     var n = 0L
-    var lineHasBytes = false
-    var lineStart = pos
-    var b = in.read()
-    while (b != -1 && lineStart < end) {
-      if (b == '\n') {
-        if (lineHasBytes) n += 1
-        pos += 1; lineStart = pos; lineHasBytes = false
-      } else {
-        pos += 1; lineHasBytes = true
-      }
-      b = in.read()
-    }
-    if (lineHasBytes && lineStart < end) n += 1 // unterminated final line
+    while (lines.nextNonEmpty() >= 0) n += 1
     n
   }
 }
@@ -1517,6 +1494,11 @@ private[sources] object DocPartitions {
 private[sources] object GraftScanMetrics {
   val emitted = new java.util.concurrent.atomic.LongAdder
   val skipped = new java.util.concurrent.atomic.LongAdder
+  /** Filtered direct-path batches emitted as decoded (enough rows
+    * survived) vs compacted to their survivors — the selectivity
+    * decision of [[DirectColumnarReaderBase]]. */
+  val passedThrough = new java.util.concurrent.atomic.LongAdder
+  val compacted = new java.util.concurrent.atomic.LongAdder
   /** Documents decoded by the DIRECT bytes→vector BSON path (no
     * JsonNode tree) — lets specs assert which decode path engaged. */
   val direct = new java.util.concurrent.atomic.LongAdder
@@ -1601,10 +1583,12 @@ private[sources] class GraftReaderFactory(schema: StructType, allowInvalid: Bool
       // filter is present would surrender the win where it matters.
       // Pushed filters evaluate per row against the freshly decoded
       // vectors (decode-before-filter, same error-parity contract as
-      // the tree path) and surviving rows compact into the output
-      // batch; Spark re-evaluates pushed filters post-scan either way.
-      // The JsonNode-tree ColumnarDocReader remains the fallback for
-      // declared types without a direct writer.
+      // the tree path). Spark re-evaluates every pushed doc filter
+      // post-scan (pushFilters returns them all), so a chunk where at
+      // least half the rows survive is emitted as decoded; a more
+      // selective chunk compacts to its survivors. The JsonNode-tree
+      // ColumnarDocReader remains the fallback for declared types
+      // without a direct writer.
       if (direct && p.path.endsWith(".bson") &&
           docSchema.fields.forall(f => graft.bson.BsonVectorDecoder.supports(f.dataType))) {
         val path = new Path(p.path)
@@ -1917,13 +1901,18 @@ private[sources] object VectorRead {
 
 /** Shared chassis for the DIRECT (tree-free) columnar partition readers:
   * batch/vector lifecycle, pushed-LIMIT accounting, and decode-time
-  * filter evaluation with row compaction. Subclasses supply one-document
-  * decode ([[decodeOne]] appends exactly one row to every vector).
+  * filter evaluation. Subclasses supply one-document decode
+  * ([[decodeOne]] appends exactly one row to every vector).
   *
   * Pushed filters (when present) evaluate per document against the
   * just-decoded row — decode-BEFORE-filter, so strict-mode type errors
-  * raise exactly as on the tree path — and surviving rows compact into a
-  * second vector set that becomes the output batch.
+  * raise exactly as on the tree path. The verdicts decide the batch by
+  * selectivity: when at least [[DirectColumnarReaderBase.PassThrough]]
+  * of a decoded chunk survives, the chunk is emitted unchanged, failing
+  * rows included — sound because every pushed doc filter is also
+  * returned to Spark for post-scan evaluation, which drops them. A more
+  * selective chunk compacts its survivors into a second vector set. The
+  * emitted/skipped counters and the pushed LIMIT count survivors only.
   *
   * Documented divergence: the direct decode writes straight into
   * vectors, so APPENDER-stage narrowing (date32 day-count toIntExact,
@@ -1939,23 +1928,21 @@ private[sources] abstract class DirectColumnarReaderBase(
     filters: Array[Filter], partValues: Map[String, Any])
   extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+  import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
   private var remaining = limitRows
   protected val capacity = 4096
   protected val vectors = OnHeapColumnVector.allocateColumns(capacity, schema)
-  private val batch = new org.apache.spark.sql.vectorized.ColumnarBatch(
-    vectors.asInstanceOf[Array[org.apache.spark.sql.vectorized.ColumnVector]])
+  private val batch = new ColumnarBatch(vectors.asInstanceOf[Array[ColumnVector]])
+  private var current = batch
 
   // ---- decode-time filter machinery (allocated only when needed) ----
   private val hasFilters = filters.nonEmpty
-  private val outVectors =
-    if (hasFilters) OnHeapColumnVector.allocateColumns(capacity, schema) else null
-  private val outBatch =
-    if (hasFilters) new org.apache.spark.sql.vectorized.ColumnarBatch(
-      outVectors.asInstanceOf[Array[org.apache.spark.sql.vectorized.ColumnVector]])
-    else null
-  private val copiers =
-    if (hasFilters) schema.fields.map(f => VectorRead.copier(f.dataType)) else null
+  private val survived = if (hasFilters) new Array[Boolean](capacity) else null
+  // compaction target: allocated by the first chunk that compacts
+  private var outVectors: Array[OnHeapColumnVector] = _
+  private var outBatch: ColumnarBatch = _
+  private lazy val copiers = schema.fields.map(f => VectorRead.copier(f.dataType))
   // per filter-referenced doc column: ordinal + external-value reader
   private val filterReaders: Map[String, (org.apache.spark.sql.catalyst.InternalRow => Any)] =
     if (!hasFilters) Map.empty
@@ -1975,9 +1962,41 @@ private[sources] abstract class DirectColumnarReaderBase(
 
   protected def closeInput(): Unit
 
+  /** Do the pushed filters keep decoded row `i`? */
+  private def survives(i: Int): Boolean = {
+    batch.setNumRows(i + 1)
+    val row = batch.getRow(i)
+    def get(name: String): Any = filterReaders.get(name) match {
+      case Some(rd) => rd(row)
+      case None => partValues.getOrElse(name, null)
+    }
+    filters.forall(DocFilterEval.eval(_, get))
+  }
+
+  /** Copy the surviving rows of the `nDec` decoded ones into the output
+    * vector set. */
+  private def compact(nDec: Int): Unit = {
+    if (outBatch == null) {
+      outVectors = OnHeapColumnVector.allocateColumns(capacity, schema)
+      outBatch = new ColumnarBatch(outVectors.asInstanceOf[Array[ColumnVector]])
+    }
+    var k = 0
+    while (k < outVectors.length) { outVectors(k).reset(); k += 1 }
+    var i = 0
+    while (i < nDec) {
+      if (survived(i)) {
+        val row = batch.getRow(i)
+        var j = 0
+        while (j < copiers.length) { copiers(j)(row, j, outVectors(j)); j += 1 }
+      }
+      i += 1
+    }
+  }
+
   override def next(): Boolean = {
     if (remaining <= 0) return false
     var nOut = 0
+    var nDec = 0
     var eof = false
     // with a selective filter a whole decode chunk can produce zero
     // survivors — keep decoding chunks until rows surface or EOF
@@ -1985,53 +2004,51 @@ private[sources] abstract class DirectColumnarReaderBase(
     while (continue) {
       var i = 0
       while (i < vectors.length) { vectors(i).reset(); i += 1 }
-      if (hasFilters) {
-        var k = 0
-        while (k < outVectors.length) { outVectors(k).reset(); k += 1 }
-      }
-      var nDec = 0
+      nDec = 0
       while (nDec < capacity && nOut < remaining && !eof) {
         if (!decodeOne()) eof = true
         else {
           GraftScanMetrics.direct.increment()
-          if (!hasFilters) {
+          val keep = !hasFilters || survives(nDec)
+          if (hasFilters) survived(nDec) = keep
+          if (keep) {
             GraftScanMetrics.emitted.increment()
             nOut += 1
-          } else {
-            batch.setNumRows(nDec + 1)
-            val row = batch.getRow(nDec)
-            def get(name: String): Any = filterReaders.get(name) match {
-              case Some(rd) => rd(row)
-              case None => partValues.getOrElse(name, null)
-            }
-            if (filters.forall(DocFilterEval.eval(_, get))) {
-              var j = 0
-              while (j < copiers.length) {
-                copiers(j)(row, j, outVectors(j))
-                j += 1
-              }
-              GraftScanMetrics.emitted.increment()
-              nOut += 1
-            } else GraftScanMetrics.skipped.increment()
-          }
+          } else GraftScanMetrics.skipped.increment()
           nDec += 1
         }
       }
       continue = hasFilters && nOut == 0 && !eof
     }
     remaining -= nOut
-    val out = if (hasFilters) outBatch else batch
-    out.setNumRows(nOut)
+    batch.setNumRows(nDec)
+    current = batch
+    if (hasFilters && nOut > 0) {
+      if (nOut >= nDec * DirectColumnarReaderBase.PassThrough)
+        GraftScanMetrics.passedThrough.increment()
+      else {
+        compact(nDec)
+        outBatch.setNumRows(nOut)
+        current = outBatch
+        GraftScanMetrics.compacted.increment()
+      }
+    }
     nOut > 0
   }
 
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch =
-    if (hasFilters) outBatch else batch
+  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = current
   override def close(): Unit = {
     batch.close()
     if (outBatch != null) outBatch.close()
     closeInput()
   }
+}
+
+private[sources] object DirectColumnarReaderBase {
+  /** Survivor share at or above which a filtered chunk is emitted as
+    * decoded rather than compacted: copying most of a chunk costs more
+    * than letting Spark's post-scan filter drop the few failing rows. */
+  final val PassThrough = 0.5
 }
 
 /** Direct BSON→ColumnarBatch partition reader: length-prefixed documents
@@ -2047,32 +2064,36 @@ private[sources] class BsonColumnarReader(
 
   private val in = new java.io.BufferedInputStream(fsIn, 1 << 16)
   private val writers = schema.fields.map(BsonVectorDecoder.writerFor(_, strict))
-  private val fieldIdx = {
-    val m = new java.util.HashMap[String, Integer]()
-    schema.fieldNames.zipWithIndex.foreach { case (n, i) => m.put(n, i) }
-    m
-  }
+  private val names = new BsonVectorDecoder.NameTable(schema.fieldNames)
   private val seen = new Array[Boolean](schema.length)
   private var body = new Array[Byte](1 << 12) // grows to the largest doc
 
+  /** Read up to `n` bytes into `body` at `off`; the count read (short
+    * only at end of input). */
+  private def readUpTo(off: Int, n: Int): Int = {
+    var got = 0
+    var r = 0
+    while (got < n && r >= 0) {
+      r = in.read(body, off + got, n - got)
+      if (r > 0) got += r
+    }
+    got
+  }
+
   /** Next document body length, or -1 at clean EOF. */
   private def readDocInto(): Int = {
-    val b0 = in.read()
-    if (b0 < 0) return -1
-    val b1 = in.read(); val b2 = in.read(); val b3 = in.read()
-    if (b3 < 0) throw new java.io.EOFException("truncated BSON length prefix")
-    val len = b0 | (b1 << 8) | (b2 << 16) | (b3 << 24)
+    val p = readUpTo(0, 4)
+    if (p == 0) return -1
+    if (p < 4) throw new java.io.EOFException("truncated BSON length prefix")
+    val len = (body(0) & 0xFF) | ((body(1) & 0xFF) << 8) |
+      ((body(2) & 0xFF) << 16) | (body(3) << 24)
     if (len < 5 || len > graft.bson.BsonBinary.MaxDocBytes)
       throw new graft.bson.GraftTypeError(s"invalid BSON document length $len")
     val n = len - 4
     if (body.length < n) body = new Array[Byte](Integer.highestOneBit(n) * 2)
-    var off = 0
-    while (off < n) {
-      val r = in.read(body, off, n - off)
-      if (r < 0) throw new java.io.EOFException(
-        s"truncated BSON document: expected $n bytes, got $off")
-      off += r
-    }
+    val got = readUpTo(0, n)
+    if (got < n) throw new java.io.EOFException(
+      s"truncated BSON document: expected $n bytes, got $got")
     n
   }
 
@@ -2082,7 +2103,7 @@ private[sources] class BsonColumnarReader(
     else {
       val buf = java.nio.ByteBuffer.wrap(body, 0, len)
         .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      BsonVectorDecoder.walkDocument(buf, writers, fieldIdx, vectors, seen)
+      BsonVectorDecoder.walkDocument(buf, writers, names, vectors, seen)
       true
     }
   }
@@ -2115,7 +2136,7 @@ private[sources] class JsonlColumnarReader(
     val len = lines.nextNonEmpty()
     if (len < 0) false
     else {
-      val p = JsonVectorDecoder.factory.createParser(lines.buffer, 0, len)
+      val p = JsonVectorDecoder.factory.createParser(lines.buffer, lines.offset, len)
       try JsonVectorDecoder.walkDocument(p, writers, fieldIdx, vectors, seen)
       finally p.close()
       true
@@ -2167,15 +2188,19 @@ private[sources] class PartitionFilledBatchReader(
       }
     }
   private var outBatch: org.apache.spark.sql.vectorized.ColumnarBatch = _
+  private var wiredTo: org.apache.spark.sql.vectorized.ColumnarBatch = _
 
   override def next(): Boolean = inner.next()
 
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = {
     val b = inner.get()
-    if (outBatch == null) { // inner reuses its batch object: wire once
+    // inner reuses its batch objects (a direct reader alternates between
+    // its decoded and its compacted batch): rewire only on a switch
+    if (b ne wiredTo) {
       val cols = outSchema.fields.indices.map(i =>
         if (docIdx(i) >= 0) b.column(docIdx(i)) else constVectors(i)).toArray
       outBatch = new org.apache.spark.sql.vectorized.ColumnarBatch(cols)
+      wiredTo = b
     }
     outBatch.setNumRows(b.numRows())
     outBatch
@@ -2187,59 +2212,86 @@ private[sources] class PartitionFilledBatchReader(
   }
 }
 
-/** Newline-aligned split reader over a seekable stream: owns every line
-  * whose FIRST byte lies in [start, end). Seeks to start-1 and discards
-  * through the first newline: when the byte at start-1 IS a newline, the
-  * line beginning exactly at start is preserved (reading from start
-  * would wrongly discard it — no split would ever emit it); otherwise
-  * start landed mid-line and that line belongs to the previous split. */
-/** Byte-range line reader for split `.jsonl` files: the standard
+/** Byte-range line framer for split `.jsonl` files: the standard
   * text-split contract (skip the partial first line unless at offset 0;
   * own every line whose first byte precedes `end`, reading past `end` to
-  * finish the last owned line). Lines surface as raw UTF-8 bytes in a
-  * reused buffer — the direct token decoder parses them without a String
-  * alloc; the tree path wraps them into JsonNodes. */
+  * finish the last owned line). With `start` > 0 it seeks to start-1 and
+  * discards through the first newline: when the byte at start-1 IS a
+  * newline, the line beginning exactly at start is kept; otherwise start
+  * landed mid-line and that line belongs to the previous split.
+  *
+  * Input arrives in 64 KiB array reads and is scanned for '\n' in place:
+  * a line surfaces as `buffer(offset until offset + len)` — no per-byte
+  * stream call and no copy. A line straddling a read moves to the
+  * buffer's front before the next read; a line longer than the buffer
+  * doubles it. The direct token decoder parses the slice without a
+  * String alloc; the tree path wraps it into JsonNodes. */
 private[sources] final class JsonlRawLines(
-    fsIn: org.apache.hadoop.fs.FSDataInputStream, start: Long, end: Long) {
-  private var pos = if (start > 0) start - 1 else 0L
-  private val in = {
-    if (pos > 0) fsIn.seek(pos)
-    val buffered = new java.io.BufferedInputStream(fsIn, 1 << 16)
-    if (start > 0) {
-      var b = buffered.read()
-      while (b != -1 && b != '\n') { pos += 1; b = buffered.read() }
-      if (b != -1) pos += 1
-    }
-    buffered
-  }
-  private var buf = new Array[Byte](1 << 12)
+    in: org.apache.hadoop.fs.FSDataInputStream, start: Long, end: Long) {
+  private var buf = new Array[Byte](1 << 16)
+  private var lo = 0         // first unconsumed byte in buf
+  private var hi = 0         // end of the bytes read into buf
+  private var base = if (start > 0) start - 1 else 0L // file offset of buf(0)
+  private var eof = false
+  private var off = 0
+  private var at = 0L
 
-  /** Reused line buffer; valid for the length the last next*() returned. */
+  if (start > 0) { in.seek(start - 1); frame(): Unit }
+
+  /** Line buffer; valid for the last next*() result until the next call. */
   def buffer: Array[Byte] = buf
+  /** Offset in [[buffer]] of the line the last next*() returned. */
+  def offset: Int = off
+  /** File offset of the line the last next*() returned. */
+  def lineStart: Long = at
 
-  /** Read the next owned line into [[buffer]]; returns its byte length,
-    * or -1 when the split is exhausted (empty lines return 0). */
-  def next(): Int = {
-    if (pos >= end) return -1
-    var b = in.read()
-    if (b == -1) return -1
-    var n = 0
-    while (b != -1 && b != '\n') {
-      if (n == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
-      buf(n) = b.toByte
-      n += 1; pos += 1
-      b = in.read()
+  /** Move the unconsumed tail to the front (doubling a full buffer) and
+    * read more; false at end of input. */
+  private def fill(): Boolean = !eof && {
+    if (lo > 0) {
+      System.arraycopy(buf, lo, buf, 0, hi - lo)
+      base += lo; hi -= lo; lo = 0
     }
-    if (b != -1) pos += 1
-    n
+    if (hi == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+    val r = in.read(buf, hi, buf.length - hi)
+    if (r < 0) eof = true else hi += r
+    r >= 0
   }
 
-  /** [[next]], skipping empty lines; -1 when exhausted. */
-  def nextNonEmpty(): Int = {
-    var n = next()
-    while (n == 0) n = next()
-    n
+  /** Consume one line and its newline; its length, -1 at end of input. */
+  private def frame(): Int = {
+    var i = lo
+    while (true) {
+      while (i < hi && buf(i) != '\n') i += 1
+      if (i < hi) { off = lo; lo = i + 1; return i - off }
+      val scanned = i - lo
+      if (!fill()) {
+        if (lo == hi) return -1
+        off = lo; lo = hi; return hi - off // unterminated final line
+      }
+      i = lo + scanned
+    }
+    -1
   }
+
+  /** Skip newline bytes; false when the input ends first. */
+  def skipEmptyLines(): Boolean = {
+    var more = true
+    while (more) {
+      while (lo < hi && buf(lo) == '\n') lo += 1
+      more = lo == hi && fill()
+    }
+    lo < hi
+  }
+
+  /** Frame the next owned non-empty line; its byte length, or -1 when
+    * the split is exhausted. */
+  def nextNonEmpty(): Int =
+    if (!skipEmptyLines()) -1
+    else {
+      at = base + lo
+      if (at >= end) -1 else frame()
+    }
 
   def close(): Unit = in.close()
 }
@@ -2258,7 +2310,7 @@ private[sources] class JsonlLineIterator(
   override def next(): com.fasterxml.jackson.databind.JsonNode = {
     if (!hasNext) throw new NoSuchElementException
     val n = nextLen; nextLen = -2
-    mapper.readTree(new String(lines.buffer, 0, n,
+    mapper.readTree(new String(lines.buffer, lines.offset, n,
       java.nio.charset.StandardCharsets.UTF_8))
   }
 }

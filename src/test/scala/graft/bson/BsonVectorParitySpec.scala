@@ -223,4 +223,151 @@ class BsonVectorParitySpec extends AnyFunSuite {
     val (direct, tree) = bothPaths(rows, w, r)
     assert(direct == tree)
   }
+
+  test("byte-level name matching: field orders, undeclared, duplicate, " +
+    "non-ASCII and prefix names, nested levels, decimal128 bit forms") {
+    // Documents are hand-encoded so every one can permute its fields at
+    // every level, interleave undeclared names, and repeat a name. The
+    // direct path keeps a repeated name's FIRST value; the tree path
+    // reads the same document with the repeats removed.
+    val rnd = new scala.util.Random(20261018L)
+    sealed trait V
+    final case class Leaf(v: Any) extends V // null, Long, String, Double, BigDecimal
+    final case class Bid(high: Long, low: Long) extends V
+    final case class Doc(fields: Seq[(String, V, Boolean)]) extends V // (name, value, repeat)
+    final case class Arr(elems: Seq[V]) extends V
+
+    def cstr(o: java.io.ByteArrayOutputStream, n: String): Unit = {
+      o.write(n.getBytes("UTF-8")); o.write(0)
+    }
+    def le(o: java.io.ByteArrayOutputStream, x: Long, bytes: Int): Unit =
+      (0 until bytes).foreach(i => o.write((x >>> (8 * i)).toInt & 0xFF))
+    def body(elems: Seq[(String, V)], repeats: Boolean): Array[Byte] = {
+      val o = new java.io.ByteArrayOutputStream()
+      elems.foreach { case (n, v) =>
+        v match {
+          case Leaf(null) => o.write(0x0A); cstr(o, n)
+          case Leaf(x: Long) => o.write(0x12); cstr(o, n); le(o, x, 8)
+          case Leaf(x: Double) => o.write(0x01); cstr(o, n)
+            le(o, java.lang.Double.doubleToLongBits(x), 8)
+          case Leaf(x: String) => o.write(0x02); cstr(o, n)
+            val b = x.getBytes("UTF-8"); le(o, b.length + 1L, 4); o.write(b); o.write(0)
+          case Leaf(x: java.math.BigDecimal) =>
+            val (h, l) = BsonBinary.decimal128Bits(x)
+            o.write(0x13); cstr(o, n); le(o, l, 8); le(o, h, 8)
+          case Bid(h, l) => o.write(0x13); cstr(o, n); le(o, l, 8); le(o, h, 8)
+          case d: Doc => o.write(0x03); cstr(o, n); o.write(encode(d, repeats))
+          case Arr(es) => o.write(0x04); cstr(o, n)
+            o.write(frame(body(es.zipWithIndex.map { case (e, i) => (i.toString, e) },
+              repeats)))
+          case other => fail(s"unencodable $other")
+        }
+      }
+      o.toByteArray
+    }
+    def frame(b: Array[Byte]): Array[Byte] = {
+      val o = new java.io.ByteArrayOutputStream()
+      le(o, b.length + 5L, 4); o.write(b); o.write(0)
+      o.toByteArray
+    }
+    def encode(d: Doc, repeats: Boolean): Array[Byte] =
+      frame(body(d.fields.filter(repeats || !_._3).map(f => (f._1, f._2)), repeats))
+
+    val decimals: Seq[V] = Seq(
+      Leaf(new java.math.BigDecimal("12345.6789012345")),
+      Leaf(new java.math.BigDecimal("-0.00000000015")),    // rounds HALF_UP
+      Leaf(new java.math.BigDecimal("7E+5")),               // positive exponent
+      Leaf(new java.math.BigDecimal("0E-3")),
+      Leaf(new java.math.BigDecimal("9223372036854775807")), // coefficient = Long.MaxValue
+      Leaf(new java.math.BigDecimal("1180591620717411303424.5")), // coefficient > long
+      Leaf(new java.math.BigDecimal("1E+20")),
+      Bid(0xB040000000000000L, 0L),                         // -0
+      Bid(0x3040000000000000L, -1L),                        // low word with its top bit set
+      Bid(0x7C00000000000000L, 0L),                         // NaN → null
+      Bid(0xF800000000000000L, 0L),                         // -Infinity → null
+      Bid(0x6C10000000000000L, 5L))                         // `11` combination form
+    def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.length))
+    def scalar(dt: DataType): V =
+      if (rnd.nextInt(10) == 0) Leaf(null)
+      else dt match {
+        case LongType => Leaf(rnd.nextLong() >> rnd.nextInt(60))
+        case StringType => Leaf(pick(Seq("", "v", "héllo", "名前", "x" * 30)))
+        case DoubleType => Leaf(rnd.nextDouble() * 1e6 - 5e5)
+        case _: DecimalType => pick(decimals)
+        case other => fail(s"no generator for $other")
+      }
+    val undeclared = Seq("abcd", "b", "ée", "名", "_x", "structs0")
+    def undeclaredValue(): V = rnd.nextInt(4) match {
+      case 0 => Leaf(rnd.nextLong())
+      case 1 => Leaf("skip me")
+      case 2 => Doc(Seq(("a", Leaf(1L), false), ("inner", Arr(Seq(Leaf(2L))), false)))
+      case _ => Arr(Seq(Leaf("x"), Doc(Seq(("k", Leaf(3L), false)))))
+    }
+    def value(dt: DataType): V = dt match {
+      case st: StructType => if (rnd.nextInt(12) == 0) Leaf(null) else doc(st)
+      case ArrayType(et, _) =>
+        if (rnd.nextInt(12) == 0) Leaf(null)
+        else Arr(Seq.fill(rnd.nextInt(4))(value(et)))
+      case other => scalar(other)
+    }
+    // declared fields in a fresh order (some missing), undeclared names
+    // interleaved, and sometimes a later repeat of a present name
+    def doc(st: StructType): Doc = {
+      val present = rnd.shuffle(st.fields.toSeq.filter(_ => rnd.nextInt(8) != 0))
+      var fields: Seq[(String, V, Boolean)] =
+        present.map(f => (f.name, value(f.dataType), false))
+      for (_ <- 0 until rnd.nextInt(4)) {
+        val at = rnd.nextInt(fields.length + 1)
+        fields = fields.patch(at, Seq((pick(undeclared), undeclaredValue(), false)), 0)
+      }
+      if (present.nonEmpty && rnd.nextInt(3) == 0) {
+        val f = pick(present)
+        val first = fields.indexWhere(_._1 == f.name)
+        val at = first + 1 + rnd.nextInt(fields.length - first)
+        fields = fields.patch(at, Seq((f.name, scalar(LongType), true)), 0)
+      }
+      Doc(fields)
+    }
+
+    val schema = StructType(Seq(
+      StructField("a", LongType), StructField("ab", StringType),
+      StructField("abc", DoubleType), StructField("é", LongType),
+      StructField("名前", StringType), StructField("dec", DecimalType(38, 10)),
+      StructField("s", StructType(Seq(
+        StructField("x", LongType), StructField("xy", StringType),
+        StructField("ü", DoubleType),
+        StructField("in", StructType(Seq(
+          StructField("a", LongType), StructField("aa", StringType))))))),
+      StructField("structs", ArrayType(StructType(Seq(
+        StructField("k", LongType), StructField("kk", StringType),
+        StructField("d", DecimalType(38, 4)))))),
+      StructField("tags", ArrayType(StringType))))
+    val docs = Seq.fill(400)(doc(schema))
+    assert(docs.exists(_.fields.exists(_._3)), "no repeated names generated")
+    val dir = java.nio.file.Files.createTempDirectory("graft_bvd_names")
+    def write(sub: String, repeats: Boolean): String = {
+      val d = dir.resolve(sub)
+      java.nio.file.Files.createDirectories(d)
+      val out = new java.io.ByteArrayOutputStream()
+      docs.foreach(x => out.write(encode(x, repeats)))
+      java.nio.file.Files.write(d.resolve("docs.bson"), out.toByteArray)
+      d.toString
+    }
+    val withRepeats = write("direct", repeats = true)
+    val firstOnly = write("tree", repeats = false)
+    // full, pruned (most names undeclared) and reordered declarations
+    val pruned = StructType(Seq(schema("abc"), schema("structs")))
+    val reordered = StructType(schema.fields.reverse.toIndexedSeq)
+    for (rs <- Seq(schema, pruned, reordered)) {
+      def read(path: String, columnar: Boolean) =
+        spark.read.format("graftdocs").schema(rs)
+          .option("columnar", columnar).option("allowInvalid", true)
+          .load(path).collect().toSeq.map(_.json)
+      val direct = read(withRepeats, columnar = true)
+      assert(direct.length == docs.length)
+      assert(direct == read(firstOnly, columnar = false), rs.simpleString)
+      // same verdict from the direct path without repeated names
+      assert(direct == read(firstOnly, columnar = true), rs.simpleString)
+    }
+  }
 }

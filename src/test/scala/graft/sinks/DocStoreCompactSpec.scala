@@ -73,4 +73,65 @@ class DocStoreCompactSpec extends AnyFunSuite {
       Seq(("0", 100L), ("1", 100L), ("2", 100L)))
     assert(store.readTag("p", "batchId").contains("9"))
   }
+
+  // one BSON document {x: <MinKey 0xFF>}: its length prefix is sound, so
+  // the append commits, but the tree parser rejects the element type
+  private val unfoldable: Array[Byte] = Array[Byte](8, 0, 0, 0, -1, 'x', 0, 0)
+  private def oneDoc(i: Long): Array[Byte] = graft.bson.BsonBinary.encodeRow(
+    org.apache.spark.sql.Row(i),
+    org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("n", org.apache.spark.sql.types.LongType))))
+  private def batchFiles(root: String, coll: String): Seq[String] =
+    Option(new java.io.File(s"$root/$coll").list()).toSeq.flatten
+      .filter(n => n.startsWith("insert_") && n.endsWith(".bson")).sorted
+
+  test("appendRaw: a committed batch whose type tree cannot fold still " +
+    "returns, stays visible, and a capped append still evicts") {
+    val root = java.nio.file.Files.createTempDirectory("cpt_fold").toString
+    val store = new DocStore(spark, root, "graftdocs")
+    intercept[graft.bson.GraftTypeError](
+      graft.bson.BsonBinary.documents(
+        new java.io.ByteArrayInputStream(unfoldable)).next())
+    // uncapped: the commit stands and is reported as one
+    store.appendRaw("u", unfoldable)
+    assert(batchFiles(root, "u").size == 1)
+    // capped at one doc: the unfoldable append must still evict the head
+    store.declareCapped("k", max = 1L)
+    store.appendRaw("k", oneDoc(1L))
+    val head = batchFiles(root, "k")
+    assert(head.size == 1)
+    store.appendRaw("k", unfoldable)
+    val afterBad = batchFiles(root, "k")
+    assert(afterBad.size == 1 && afterBad != head, afterBad)
+    // the next append evicts the unfoldable file; the reader's schema
+    // (sidecar or inference job) covers exactly the live file
+    store.appendRaw("k", oneDoc(2L))
+    assert(batchFiles(root, "k").size == 1)
+    assert(store.read("k").collect().map(_.getLong(0)).toSeq == Seq(2L))
+  }
+
+  test("cap eviction on the raw local fs leaves no orphan .crc") {
+    val root = java.nio.file.Files.createTempDirectory("cpt_crc").toString
+    val store = new DocStore(spark, root, "graftdocs")
+    store.declareCapped("c", max = 2L)
+    // a store written earlier through the checksummed LocalFileSystem:
+    // every batch file carries a `.<name>.crc` twin
+    val lfs = org.apache.hadoop.fs.FileSystem.getLocal(
+      new org.apache.hadoop.conf.Configuration())
+    for (i <- 1 to 2) {
+      val out = lfs.create(
+        new org.apache.hadoop.fs.Path(store.path("c"), s"insert_${i}_1.bson"), true)
+      try out.write(oneDoc(i.toLong)) finally out.close()
+    }
+    def crcs = new java.io.File(store.path("c")).list().filter(_.endsWith(".crc")).toSeq
+    assert(crcs.size == 2, crcs)
+    store.appendRaw("c", oneDoc(3L))
+    store.appendRaw("c", oneDoc(4L))
+    assert(!batchFiles(root, "c").exists(_.startsWith("insert_1_")))
+    assert(!batchFiles(root, "c").exists(_.startsWith("insert_2_")))
+    val orphans = crcs.filterNot(c =>
+      new java.io.File(store.path("c"), c.stripPrefix(".").stripSuffix(".crc")).exists())
+    assert(orphans.isEmpty, s"orphaned checksum files: $orphans")
+    assert(store.read("c").collect().map(_.getLong(0)).toSeq.sorted == Seq(3L, 4L))
+  }
 }

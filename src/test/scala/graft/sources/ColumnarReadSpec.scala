@@ -242,4 +242,139 @@ class ColumnarReadSpec extends AnyFunSuite {
     assert(df.count() == 10000)
     assert(df.agg(sum("i")).head.getLong(0) == 10000L * 10001 / 2)
   }
+
+  private def resetScanMetrics(): Unit = {
+    GraftScanMetrics.emitted.reset(); GraftScanMetrics.skipped.reset()
+    GraftScanMetrics.passedThrough.reset(); GraftScanMetrics.compacted.reset()
+  }
+
+  test("filtered direct scans pass mostly-surviving batches through and " +
+    "compact selective ones; emitted/skipped stay exact") {
+    val schema = StructType(Seq(StructField("id", LongType), StructField("s", StringType)))
+    for (format <- Seq("bson", "jsonl")) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_pass").toString
+      spark.range(10000).selectExpr("id", "concat('s', id) as s").coalesce(1)
+        .write.format("graftdocs").option("format", format)
+        .mode("overwrite").save(dir)
+      def scan(cond: org.apache.spark.sql.Column): Seq[Long] = {
+        resetScanMetrics()
+        spark.read.format("graftdocs").schema(schema).load(dir).where(cond)
+          .collect().toSeq.map(_.getLong(0)).sorted
+      }
+      // ~99% survive: every batch leaves the reader as decoded
+      assert(scan($"id" >= 100) == (100L until 10000L), format)
+      assert(GraftScanMetrics.emitted.sum() == 9900 &&
+        GraftScanMetrics.skipped.sum() == 100, format)
+      assert(GraftScanMetrics.passedThrough.sum() > 0 &&
+        GraftScanMetrics.compacted.sum() == 0, format)
+      // ~1% survive: the batch holding the survivors compacts
+      assert(scan($"id" < 100) == (0L until 100L), format)
+      assert(GraftScanMetrics.emitted.sum() == 100 &&
+        GraftScanMetrics.skipped.sum() == 9900, format)
+      assert(GraftScanMetrics.compacted.sum() > 0 &&
+        GraftScanMetrics.passedThrough.sum() == 0, format)
+    }
+  }
+
+  test("hive-partitioned direct scan alternating passed-through and " +
+    "compacted batches fills the partition column into both") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pass_part")
+    val part = dir.resolve("p=7")
+    java.nio.file.Files.createDirectories(part)
+    // batch-sized runs: all survive, ~1% survive, all survive
+    val n = 3 * 4096
+    def v(i: Int): Int = if (i / 4096 == 1 && i % 100 != 0) 0 else 1
+    java.nio.file.Files.write(part.resolve("part-0.jsonl"),
+      (0 until n).map(i => s"""{"i": $i, "v": ${v(i)}}""")
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+    val schema = StructType(Seq(StructField("i", LongType),
+      StructField("v", IntegerType), StructField("p", IntegerType)))
+    def rows(columnar: Boolean) = spark.read.format("graftdocs").schema(schema)
+      .option("columnar", columnar).load(dir.toString).where($"v" === 1)
+      .collect().toSeq.map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).sortBy(_._1)
+    resetScanMetrics()
+    val direct = rows(columnar = true)
+    assert(GraftScanMetrics.passedThrough.sum() == 2 &&
+      GraftScanMetrics.compacted.sum() == 1)
+    val expected = (0 until n).filter(v(_) == 1).map(i => (i.toLong, 1, 7))
+    assert(direct == expected)
+    assert(rows(columnar = false) == expected)
+  }
+
+  /** Non-empty lines of `bytes` split plainly on '\n': the row set every
+    * split layout must reproduce. */
+  private def plainLines(bytes: Array[Byte]): Seq[String] =
+    new String(bytes, "UTF-8").split("\n", -1).toSeq.filter(_.nonEmpty)
+
+  private def lineIds(lines: Seq[String]): Seq[Long] =
+    lines.map(l => "\"i\": (\\d+)".r.findFirstMatchIn(l).get.group(1).toLong).sorted
+
+  /** Direct rows, row-path rows (when asked) and the pushed count(*) of
+    * `dir` read with `split`-byte splits, against the plain split. */
+  private def assertFramed(dir: String, expected: Seq[Long], split: Long,
+                           rowPath: Boolean): Unit = {
+    val schema = StructType(Seq(StructField("i", LongType), StructField("s", StringType)))
+    def df(columnar: Boolean) = spark.read.format("graftdocs").schema(schema)
+      .option("columnar", columnar).option("maxSplitBytes", split).load(dir)
+    assert(df(columnar = true).collect().map(_.getLong(0)).toSeq.sorted == expected,
+      s"direct rows, split=$split")
+    if (rowPath) assert(df(columnar = false).collect().map(_.getLong(0)).toSeq.sorted ==
+      expected, s"row-path rows, split=$split")
+    val cnt = df(columnar = true).groupBy().count()
+    assert(cnt.queryExecution.executedPlan.toString.contains("PushedAggregation"))
+    assert(cnt.head.getLong(0) == expected.length, s"count, split=$split")
+  }
+
+  test("JSONL framer: every split offset of a small file, empty lines, " +
+    "an unterminated last line") {
+    val text = "\n{\"i\": 1, \"s\": \"a\"}\n\n{\"i\": 2, \"s\": \"héllo\"}\n\n\n" +
+      "{\"i\": 3}\n{\"i\": 4, \"s\": \"名前\"}\n\n{\"i\": 5}"
+    val bytes = text.getBytes("UTF-8")
+    val dir = java.nio.file.Files.createTempDirectory("graft_frame_small")
+    val file = dir.resolve("a.jsonl")
+    java.nio.file.Files.write(file, bytes)
+    val expected = plainLines(bytes)
+    assert(lineIds(expected) == Seq(1L, 2L, 3L, 4L, 5L))
+    // the framer itself: any two-split cut owns every line exactly once
+    val lfs = org.apache.hadoop.fs.FileSystem.getLocal(
+      new org.apache.hadoop.conf.Configuration())
+    def owned(start: Long, end: Long): Seq[String] = {
+      val lines = new JsonlRawLines(
+        lfs.open(new org.apache.hadoop.fs.Path(file.toString)), start, end)
+      try Iterator.continually(lines.nextNonEmpty()).takeWhile(_ >= 0)
+        .map(len => new String(lines.buffer, lines.offset, len, "UTF-8")).toList
+      finally lines.close()
+    }
+    for (cut <- 0 to bytes.length)
+      assert(owned(0, cut) ++ owned(cut, bytes.length) == expected, s"cut=$cut")
+    // the scan: direct rows and the pushed count at every split size
+    for (split <- 1 to bytes.length)
+      assertFramed(dir.toString, lineIds(expected), split.toLong,
+        rowPath = split % 7 == 1)
+  }
+
+  test("JSONL framer: a line straddling the 64 KiB read and a line longer " +
+    "than it") {
+    val sb = new StringBuilder
+    var i = 0
+    def line(pad: Int): Unit = {
+      i += 1
+      sb.append(s"""{"i": $i, "s": "${"x" * pad}"}""").append('\n')
+      if (i % 17 == 0) sb.append('\n') // empty lines between
+    }
+    (1 to 90).foreach(_ => line(997))
+    line(150000) // > the 64 KiB read
+    (1 to 60).foreach(_ => line(1011))
+    sb.append(s"""{"i": ${i + 1}, "s": "last"}""") // unterminated
+    val bytes = sb.toString.getBytes("UTF-8")
+    val starts = bytes.indices.filter(k => k == 0 || bytes(k - 1) == '\n')
+    assert(!starts.contains(1 << 16), "the 64 KiB boundary must fall mid-line")
+    val dir = java.nio.file.Files.createTempDirectory("graft_frame_big")
+    java.nio.file.Files.write(dir.resolve("a.jsonl"), bytes)
+    val expected = lineIds(plainLines(bytes))
+    assert(expected.length == 152)
+    for (split <- Seq(bytes.length.toLong, 1L << 16, (1L << 16) - 1, (1L << 16) + 1,
+                      100000L, 4099L))
+      assertFramed(dir.toString, expected, split, rowPath = true)
+  }
 }
